@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints TWO JSON lines: the full per-query map (also persisted to
@@ -18,19 +17,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runsN = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // compiled-code cache sizing (see GraftSession.codegenCacheEntries):
-      // caches deterministic generated Java code, never data or results
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Contamination tripwire (VERDICT r12 #6): a bench started on a busy
     // box produces a misleading artifact that is only caught at judge
@@ -47,29 +35,8 @@ object Bench {
       System.err.println(f"[bench] WARNING: start loadavg $startLoad%.1f" +
         f" on $machineCpus cpus (${startLoad / machineCpus}%.2f/core)" +
         " -- numbers will be flagged contaminated")
-    // Materializing action: executes the query's own physical plan (every
-    // projection evaluated), unlike df.count() whose Aggregate lets
-    // Catalyst prune unreferenced columns and reduce map-only queries to
-    // row counts.
-    def materialize(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    // warm the JVM/codegen/parquet-footer paths so the first measured
-    // query doesn't absorb session startup cost
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q1_pricing_summary")
-        .foreach(fn => materialize(fn(spark, sfDir)))
-    } catch { case _: Throwable => () }
-
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the run to a subset (same
-    // contract as Verify) — for timing one changed query at a big
-    // fixture. Unset = full surface (the driver's mode).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(sel) => SparkEntry.queries.filter(kv => sel(kv._1))
-      case None => SparkEntry.queries
-    }
+    Surface.warmUp(spark, sfDir)
+    val queries = Surface.queries(Surface.only)
     // run-major (full suite per repetition, not query-major) so a load
     // burst degrades one SAMPLE of many queries, not every sample of one
     // A query that THROWS must not masquerade as a healthy timing: its
@@ -83,7 +50,7 @@ object Bench {
     val samples: Seq[Seq[(String, Double)]] = (1 to runsN).map { _ =>
       queries.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { materialize(fn(spark, sfDir)) } catch {
+        try { Surface.materialize(fn(spark, sfDir)) } catch {
           case e: Throwable =>
             failedNames += name
             System.err.println(
@@ -159,7 +126,7 @@ object Bench {
     // worse than no write) — ad-hoc subset timings stay stdout-only
     // unless SPARK_GRAFT_BENCH_FULL points somewhere explicitly.
     val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL")
-      .orElse(if (only.isEmpty) Some("BENCH_FULL.json") else None)
+      .orElse(if (Surface.only.isEmpty) Some("BENCH_FULL.json") else None)
     fullPath.foreach { p =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(p),

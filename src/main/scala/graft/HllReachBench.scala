@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The HLL-vs-bitmap neighborhood trade WHERE REACH IS HIGH
@@ -15,21 +15,15 @@ import org.apache.spark.sql.functions._
   * recording per round: total/max state bytes (the shuffle payload the
   * next round must move) and wall seconds. One JSON line to stdout.
   *
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_REACH_N (vertices,
+  * Env: SPARK_GRAFT_CPUS (see GraftSession), SPARK_GRAFT_REACH_N (vertices,
   * default 100000), SPARK_GRAFT_REACH_CHORDS (default 8).
   */
 object HllReachBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.getOrElse("SPARK_GRAFT_REACH_N", "100000").toLong
     val chords = sys.env.getOrElse("SPARK_GRAFT_REACH_CHORDS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.expressions.Bitmaps

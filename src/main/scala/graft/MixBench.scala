@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Clustering, Curation, Dedup, Packing,
@@ -22,7 +22,7 @@ import graft.functions.{Clustering, Curation, Dedup, Packing,
   * fused and staged runs (asserted — the staging cannot change the
   * pipeline's semantics).
   *
-  * Env: SPARK_GRAFT_SF_DIR (fixture), SPARK_GRAFT_CPUS (default 32),
+  * Env: SPARK_GRAFT_SF_DIR (fixture), SPARK_GRAFT_CPUS (see GraftSession),
   * SPARK_GRAFT_MIX_TMP (stage-materialization dir; default tmpdir).
   */
 object MixBench {
@@ -30,14 +30,7 @@ object MixBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def docs = Tables.load(spark, sfDir, "documents")

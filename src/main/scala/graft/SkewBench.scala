@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for [[graft.ops.Scale.saltedJoin]] (VERDICT r5
@@ -25,14 +25,9 @@ import org.apache.spark.sql.functions._
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/skewdata")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runsN = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val salts = sys.env.getOrElse("SPARK_GRAFT_SALTS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
       // forced-broadcast would bypass the shuffle entirely and hide the
       // skew; the fixture dimension is 100k rows (~1.5 MB) so disable
       // auto-broadcast to measure the shuffle-join regime the operator

@@ -39,17 +39,10 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val copies = sys.env.getOrElse("SPARK_GRAFT_STREAM_COPIES", "10").toInt
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "40").toInt
     val fpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val s: SparkSession = spark

@@ -143,9 +143,8 @@ object TemporalJoins {
     * a union + window pass. Carried right columns come back as
     * `asof_<name>`, like [[asOfJoin]].
     *
-    * Requires the `graft.GraftExtensions` strategy injection (the
-    * [[graft.GraftSession]] builder does this); without it the node
-    * has no physical plan.
+    * Plans through `AsOfJoinStrategy`, which [[graft.GraftFunctions.install]]
+    * adds to a session built without `graft.GraftExtensions`.
     */
   def asOfJoinMerge(left: DataFrame, right: DataFrame, key: String,
                     leftTime: String, rightTime: String,
@@ -174,14 +173,7 @@ object TemporalJoins {
       attr(lp, key, "left"), attr(rp, key, "right"),
       attr(lp, leftTime, "left"), attr(rp, rightTime, "right"),
       valueCols.map(attr(rp, _, "right")))
-    // idempotent runtime registration: sessions built without
-    // GraftExtensions (notebooks, tests) still get a physical plan; a
-    // duplicate alongside the injected strategy is harmless (first
-    // match wins, both produce the same exec)
-    val exp = left.sparkSession.experimental
-    if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      exp.extraStrategies =
-        exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    graft.GraftFunctions.install(left.sparkSession)
     val out = PlanBridge.ofRows(left.sparkSession, node)
     valueCols.foldLeft(out)((df, c) => df.withColumnRenamed(c, s"asof_$c"))
   }

@@ -1,16 +1,29 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
-class GraftSessionSpec extends AnyFunSuite {
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
+
+import graft.plans.{AsOfJoinStrategy, RangeJoinRewrite}
+
+class GraftSessionSpec extends SparkSpec {
+  /** A child of the suite-shared session with the runtime install: the
+    * shared session itself stays plain (RangeJoinRewriteSpec uses it as
+    * the rule-off reference).
+    */
+  private def installed(): SparkSession = {
+    val s = spark.newSession()
+    GraftFunctions.install(s)
+    s
+  }
+
   test("extensions expose native expressions to SQL") {
-    // getOrCreate may return the suite-shared session (extensions only
-    // apply to fresh contexts), so register on it at runtime — the same
-    // function set GraftExtensions injects at build time
-    val spark = GraftSession.builder("local[2]", Some(2))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(spark)
+    val spark = installed()
     try {
       val row = spark.sql(
         """SELECT simhash64('hello world hello') AS sh,
@@ -63,10 +76,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("SQL functions honor optional literal args and reject over-arity") {
-    val spark = GraftSession.builder("local[2]", Some(2))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(spark)
+    val spark = installed()
     val row = spark.sql(
       """SELECT size(minhash_sig('a b c d e', 2, 32)) AS nsig,
         |       size(shingle_hashes('a b c d e', 2)) AS nsh
@@ -86,5 +96,52 @@ class GraftSessionSpec extends AnyFunSuite {
     intercept[Exception] {
       spark.sql("SELECT pushdown_barrier(1, 2)").head()
     }
+  }
+
+  test("builder derives shuffle partitions from the master and keeps " +
+      "Spark's AQE defaults on") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val nproc = Runtime.getRuntime.availableProcessors()
+    // getOrCreate hands back the suite-shared session and applies the
+    // builder's SQL confs to it; the partition count is restored below
+    try for ((master, parts) <- Seq("local[2]" -> 2, "local[3]" -> 3,
+        "local[*]" -> nproc)) {
+      val s = GraftSession.builder(master).getOrCreate()
+      assert(s.conf.get(key) == parts.toString, master)
+      for (k <- Seq("spark.sql.adaptive.enabled",
+          "spark.sql.adaptive.coalescePartitions.enabled",
+          "spark.sql.adaptive.skewJoin.enabled"))
+        assert(s.conf.get(k) == "true", s"$k under $master")
+    } finally spark.conf.set(key, prev)
+    assert(GraftSession.shufflePartitions("yarn") == 200)
+  }
+
+  test("build-time and runtime registration install the same functions, " +
+      "rule and strategy, once") {
+    val functions = ArrayBuffer[String]()
+    val rules = ArrayBuffer[Rule[LogicalPlan]]()
+    val strategies = ArrayBuffer[SparkStrategy]()
+    new GraftExtensions()(new SparkSessionExtensions {
+      override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+          Seq[Expression] => Expression)): Unit = functions += f._1.funcName
+      override def injectOptimizerRule(
+          b: SparkSession => Rule[LogicalPlan]): Unit = rules += b(null)
+      override def injectPlannerStrategy(
+          b: SparkSession => SparkStrategy): Unit = strategies += b(null)
+    })
+    assert(functions.size == 25 && functions.distinct.size == 25)
+    assert(rules == Seq(RangeJoinRewrite))
+    assert(strategies == Seq(AsOfJoinStrategy))
+
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val before = reg.listFunction().toSet
+    GraftFunctions.install(s)
+    GraftFunctions.install(s)
+    assert((reg.listFunction().toSet -- before).map(_.funcName) ==
+      functions.toSet)
+    assert(s.experimental.extraOptimizations == Seq(RangeJoinRewrite))
+    assert(s.experimental.extraStrategies == Seq(AsOfJoinStrategy))
   }
 }

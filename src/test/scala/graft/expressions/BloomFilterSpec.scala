@@ -72,7 +72,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("SQL surface: bloom_agg builds, bloom_contains probes, bad arity rejects") {
-    graft.GraftFunctions.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.range(100).select(col("id").as("v"))
       .createOrReplaceTempView("bloom_in")
     val hit = spark.sql(

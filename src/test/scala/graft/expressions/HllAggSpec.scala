@@ -103,7 +103,7 @@ class HllAggSpec extends SparkSpec {
   }
 
   test("hll_distinct is SQL-visible") {
-    graft.GraftFunctions.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.range(1000).select((col("id") % 30).as("v"))
       .createOrReplaceTempView("hll_in")
     val est = spark.sql(

@@ -72,7 +72,7 @@ class KmvDistinctAggSpec extends SparkSpec {
   }
 
   test("kmv_distinct is SQL-visible with literal-k validation") {
-    graft.GraftFunctions.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.range(1000).select((col("id") % 200).as("v"))
       .createOrReplaceTempView("kmv_in")
     val est = spark.sql(

@@ -42,7 +42,7 @@ class UnicodeNormalizeSpec extends SparkSpec {
   }
 
   test("registered SQL function, default and explicit form") {
-    graft.GraftFunctions.register(spark)
+    graft.GraftFunctions.install(spark)
     val got = spark.sql(
       s"SELECT unicode_normalize('$decomposed') AS a, " +
         s"unicode_normalize('$composed', 'NFD') AS b").head()

@@ -14,16 +14,21 @@ class RangeJoinRewriteSpec extends SparkSpec {
     "SELECT l.lid, r.rid FROM rj_l l JOIN rj_r r " +
       "ON r.rt BETWEEN l.t - 10 AND l.t"
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
+  // the shared session may already carry the rule (asOfJoinMerge and
+  // the SQL-function specs install it), so both sides pin it explicitly
+  private def withRules[A](rules: Seq[RangeJoinRewrite.type])(f: => A): A = {
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules
     try f
-    finally spark.experimental.extraOptimizations = Nil
+    finally spark.experimental.extraOptimizations = saved
   }
+  private def withRule[A](f: => A): A = withRules(Seq(RangeJoinRewrite))(f)
+  private def ruleOff[A](f: => A): A = withRules(Nil)(f)
 
   test("rewrites the key-less interval join to a bucketed equi-join") {
     left.createOrReplaceTempView("rj_l")
     right.createOrReplaceTempView("rj_r")
-    val naivePlan = spark.sql(sql).queryExecution.executedPlan.toString
+    val naivePlan = ruleOff(spark.sql(sql).queryExecution.executedPlan.toString)
     assert(naivePlan.contains("BroadcastNestedLoopJoin") ||
       naivePlan.contains("CartesianProduct"),
       s"fixture no longer plans as a pairing blow-up:\n$naivePlan")
@@ -39,7 +44,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
   test("rewritten join returns exactly the naive join's rows") {
     left.createOrReplaceTempView("rj_l")
     right.createOrReplaceTempView("rj_r")
-    val naive = spark.sql(sql).as[(Long, Long)].collect().toSet
+    val naive = ruleOff(spark.sql(sql).as[(Long, Long)].collect().toSet)
     val rewritten = withRule {
       spark.sql(sql).as[(Long, Long)].collect().toSet
     }
